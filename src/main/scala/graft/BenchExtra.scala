@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Instrumented per-query timing harness for the optimization round
-  * (guide §1.4/§1.5): same session config as [[Bench]] section 1, plus
+/** Instrumented per-query timing harness: the session of [[Bench]]
+  * section 1 ([[DevSession]]), plus
   *  - N repetitions per query (prints every sample, min, and median),
   *  - per-query Spark JOB COUNT (scheduling overhead is the dominant cost
   *    for many sub-second queries at sandbox scale),
@@ -14,6 +14,7 @@ import org.apache.spark.sql.functions._
   *  - optional noop-sink timing (arg 4 = "noop") so the computation is
   *    timed without count()'s column pruning (guide §1.4).
   * Usage: runMain graft.BenchExtra <sfDir> <q1,q2,...> [reps] [noop]
+  * (e.g. `... <sfDir> q_a,q_b 2` for best-of-2 wall times of two queries).
   * Development tool only — the driver artifact stays [[Bench]]. */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -21,21 +22,7 @@ object BenchExtra {
     val names = args(1).split(',').toSeq
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val useNoop = args.lift(3).contains("noop")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "32k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations = spark.experimental.extraOptimizations ++
-      Seq(plans.PipBboxPushdown, plans.CellCoverPushdown)
+    val spark = DevSession()
 
     val jobCount = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

@@ -10,9 +10,10 @@ package graft.core
  * computation). Border-band quirk (make_buildings.py:55-57 FIXME) is thereby
  * preserved: geometry in the expansion band beyond the bbox still paints.
  *
- * Used driver-side for small extents and as the sequential oracle in tests;
- * the distributed form is the per-geometry cell rasterization in
- * [[graft.functions.GeoFunctions]] followed by a relational anti-join.
+ * The sequential oracle of the tests only: the engine paints per geometry
+ * with [[graft.functions.GeoUdfs.rasterizePolyline]] /
+ * [[graft.functions.GeoUdfs.rasterizeFill]] and takes the complement with a
+ * relational anti-join.
  */
 final class Painter(val z: Int, val offsetX: Double, val offsetY: Double,
                     val W: Double, val S: Double, val E: Double, val N: Double) {
@@ -28,27 +29,11 @@ final class Painter(val z: Int, val offsetX: Double, val offsetY: Double,
     ((tx - txmin).toInt, (ty - tymin).toInt)
   }
 
-  /** lib/helpers.py:67-71 — NOTE: unclipped in the reference: a dot
-    * outside the canvas either raises IndexError (index >= extent) or
-    * numpy-WRAPS to the opposite edge (negative index). In-contract dots
-    * are inside the bbox, whose whole-tile canvas always contains their
-    * tile (offsets apply identically to corners and dots), so neither
-    * path is reachable; we bound-check silently as a defensive guard. */
-  def addDotTile(tx: Long, ty: Long): Unit =
-    canvas.set((tx - txmin).toInt, (ty - tymin).toInt)
-
   /** lib/helpers.py:73-76 */
   def addDotsWgs(latlngs: Iterable[(Double, Double)]): Unit =
     latlngs.foreach { case (lat, lng) =>
       val (x, y) = wgs2px(lat, lng); canvas.set(x, y)
     }
-
-  /** lib/helpers.py:78-82 — cv2.line default lineType=8. */
-  def addLineWgs(lat1: Double, lng1: Double, lat2: Double, lng2: Double, width: Int): Unit = {
-    val (x1, y1) = wgs2px(lat1, lng1)
-    val (x2, y2) = wgs2px(lat2, lng2)
-    CvRaster.thickLine(canvas, x1, y1, x2, y2, width, 8, 3)
-  }
 
   /** lib/helpers.py:84-88 — cv2.polylines(closed=True, lineType=4). The
     * closed=True is applied even to open roads in the reference; preserved. */

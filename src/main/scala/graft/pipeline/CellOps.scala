@@ -6,22 +6,24 @@ import org.apache.spark.sql.functions._
 /**
  * Hierarchical cell-cover algebra over the packed quadtree cell ids of
  * [[graft.core.CellId]] — the relational form of H3/S2 `compact`: a cover
- * set expressed at a fine zoom collapses every COMPLETE 4-sibling quad
- * into its parent, repeatedly, yielding the minimal mixed-zoom cover of
- * exactly the same area. Reference analog: none (the reference fixes one
- * zoom per run, lib/layers.py:107-118); this is the index-maintenance op a
- * planet-scale cover needs — a z19 country cover is billions of cells,
- * its compact form is orders of magnitude smaller, and coverage joins
- * against a compacted set probe one ancestor chain per point instead of
- * one equality per fine cell.
+ * set expressed at a fine zoom is replaced by its maximal COMPLETE
+ * ancestors (cells whose whole area it covers), yielding the minimal
+ * mixed-zoom cover of exactly the same area. Reference analog: none (the
+ * reference fixes one zoom per run, lib/layers.py:107-118); this is the
+ * index-maintenance op a planet-scale cover needs — a z19 country cover is
+ * billions of cells, its compact form is orders of magnitude smaller, and
+ * coverage joins against a compacted set probe one ancestor chain per
+ * point instead of one equality per fine cell.
  *
  * All cell math is integer column arithmetic (codegen'd, no UDF), exact
- * and engine-portable — q_cell_compact replays every round in DuckDB.
+ * and engine-portable — q_cell_compact has a DuckDB twin.
  *
- * Scale shape: each round is ONE groupBy on the parent id over only the
- * cells still at the current finest level (strictly shrinking set), plus
- * a pass-through union; rounds are bounded by zMax - zMin <= 29. No
- * driver-side data movement at any point.
+ * Scale shape: [[compact]] is closed-form. Each cell explodes to its
+ * ≤ zMax - zMin strict ancestors with its area weight, and ONE groupBy
+ * sums coverage per ancestor (complete iff the sum is the ancestor's whole
+ * area). Two anti-joins on the parent id then keep the maximal complete
+ * ancestors and the unabsorbed input cells. No data is collected off the
+ * executors at any point.
  */
 object CellOps {
 

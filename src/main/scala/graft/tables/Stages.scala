@@ -69,8 +69,8 @@ case class StageManifest(stage: String, snapshot_id: Long, rows: Long,
  *    generalizes the reference's JSON/tile memoization (lib/loaders.py:
  *    13-16, lib/layers.py:77-79) with staleness tracking it lacked.
  *  - **lineage + metrics**: the manifest records per-partition row counts
- *    (computed relationally via spark_partition_id, no RDD), total rows,
- *    input refs, and the commit timestamp.
+ *    (read from the committed parquet files' footers, no extra Spark job),
+ *    total rows, input refs, and the commit timestamp.
  *
  * The interface is deliberately narrow (resolve-or-compute + manifest) so a
  * real Iceberg catalog can be slotted in on a cluster.

@@ -53,10 +53,17 @@ class PipWktImageSpec extends AnyFunSuite {
     assert(lngs0.toSeq == Seq(1.1, 1.0, 1.0))
     val (lats1, lngs1) = polys(1)
     assert(lats1.toSeq == Seq(2.0, 2.0, 2.0) && lngs1.toSeq == Seq(1.0, 1.0, 1.0))
+    // the regex quirk: a negative integer loses its sign, a decimal keeps it
+    val (qlats, qlngs) = Wkt.latlngsFromWkt("POLYGON ((-3 -2.5, -1.5 4))").head
+    assert(qlngs.toSeq == Seq(3.0, -1.5) && qlats.toSeq == Seq(-2.5, 4.0))
   }
 
   test("WKT parse of the reference exclusion fixture cross-checks against JTS") {
-    val src = scala.io.Source.fromFile("/root/reference/make_buildings_except.wkt")
+    // one POLYGON per line in the reference's make_buildings_except.wkt
+    // format: negative and mixed-precision decimals, integer vertices, the
+    // ring-closing repeat vertex. Negatives are decimals only: Wkt drops
+    // the sign of a negative INTEGER (the quirk pinned by the golden above)
+    val src = scala.io.Source.fromResource("exclusion_zones.wkt")
     val txt = try src.mkString finally src.close()
     val polys = Wkt.latlngsFromWkt(txt)
     assert(polys.length == txt.linesIterator.count(_.trim.nonEmpty))

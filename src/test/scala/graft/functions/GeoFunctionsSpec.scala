@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.SparkSuite
 import graft.core._
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -108,17 +109,45 @@ class GeoFunctionsSpec extends AnyFunSuite {
       .select(explode(GeoUdfs.rasterizePolyline(ext, 2)($"lats", $"lngs")).as("cell_id"))
       .distinct().as[Long].collect().toSet
     assert(got == expected, s"painted-cell sets differ: got ${got.size}, expected ${expected.size}")
+
+    // geometry that leaves the extent is clipped to it: a way and a fill
+    // polygon each crossing the canvas border paint only in-extent cells,
+    // the same cells the sequential Painter paints
+    def at(tx: Long, ty: Long) = graft.tables.SyntheticWorld.wgsAtPixel(w.z, tx, ty, 128, 128)
+    val strayWay = Seq(at(w.tx0 - 5, w.ty0 - 3), at(w.tx0 + 3, w.ty0 + 2),
+      at(w.tx0 + w.gridW + 4, w.ty0 + 1))
+    val strayFill = Seq(at(w.tx0 - 4, w.ty0 + 2), at(w.tx0 + 3, w.ty0 - 6),
+      at(w.tx0 + 5, w.ty0 + 4), at(w.tx0 + 1, w.ty0 + w.gridH + 3))
+    def inExtent(cell: Long): Boolean =
+      CellId.z(cell) == w.z &&
+        CellId.tx(cell) >= ext.txmin && CellId.tx(cell) < ext.txmin + ext.width &&
+        CellId.ty(cell) >= ext.tymin && CellId.ty(cell) < ext.tymin + ext.height
+    def painted(raster: (Column, Column) => Column, pts: Seq[(Double, Double)]): Set[Long] =
+      Seq((pts.map(_._1), pts.map(_._2))).toDF("lats", "lngs")
+        .select(explode(raster($"lats", $"lngs")).as("cell_id")).as[Long].collect().toSet
+    val wayPainter = new Painter(w.z, 0, 0, bw, bs, be, bn)
+    wayPainter.addPolylineWgs(strayWay, width = 2)
+    val fillPainter = new Painter(w.z, 0, 0, bw, bs, be, bn)
+    fillPainter.addFillPolyWgs(strayFill)
+    for ((name, cells, oracle) <- Seq(
+        ("way", painted(GeoUdfs.rasterizePolyline(ext, 2), strayWay), wayPainter),
+        ("fill", painted(GeoUdfs.rasterizeFill(ext), strayFill), fillPainter))) {
+      assert(cells.nonEmpty, s"stray $name paints inside the extent")
+      assert(cells.forall(inExtent), s"stray $name painted outside the extent")
+      assert(cells == oracle.paintedCells.toSet, s"stray $name differs from Painter")
+    }
   }
 
   test("viewport cells: square quirk (w ignored), count = cover of h px") {
     val (lat, lng) = Mercator.wgsAtTile(302051, 168758, 19)
-    val df = Seq((lat, lng)).toDF("lat", "lng")
-      .select(GeoUdfs.viewportCells(19, 256)($"lat", $"lng").as("cells"),
-        GeoUdfs.viewportCells(19, 100)($"lat", $"lng").as("small"))
-    val r = df.head()
-    val cells = r.getSeq[Long](0)
+    def cellCount(h: Int, w: Int): Long = {
+      val (txmin, txmax, tymin, tymax, _, _) = Viewport.tilesNearWgs(lat, lng, 19, h, w, 0, 0)
+      (txmax - txmin + 1) * (tymax - tymin + 1)
+    }
     // 256px viewport centered at a tile center spans 2x2 tiles
-    assert(cells.length == 4)
-    assert(r.getSeq[Long](1).length == 1)
+    assert(cellCount(256, 256) == 4)
+    assert(cellCount(100, 100) == 1)
+    // the width argument never changes the cover
+    assert(cellCount(256, 100) == 4 && cellCount(100, 256) == 1)
   }
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Polyfill (polygon -> compacted cover) contracts: the cover equals a
-  * sequential center-in-polygon fill, and the buildings pipeline's
-  * exclusion negatives are identical through the cover path. */
+  * sequential center-in-polygon fill, and compact is lossless on the
+  * buildings pipeline's painted exclusion set. */
 class PolyfillSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   import spark.implicits._
@@ -87,7 +87,7 @@ class PolyfillSpec extends AnyFunSuite {
     }
   }
 
-  test("buildings exclusion negatives are identical through the compacted-cover path") {
+  test("compact is lossless on the buildings exclusion painted set") {
     val w = SyntheticWorld.testWorld
     val nodes = SyntheticWorld.osmNodes(spark, w)
     val ways = SyntheticWorld.osmWays(spark, w)
@@ -109,16 +109,13 @@ class PolyfillSpec extends AnyFunSuite {
       .select(explode(graft.functions.GeoUdfs.rasterizeFill(cfg.ext)($"lats", $"lngs")).as("cell_id"))
     val painted = outline.unionByName(fill).distinct().cache()
 
-    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.select($"cell_id").as[Long].collect().sorted.toSeq
-    val plain = ids(Pipelines.negativeCells(spark, painted, cfg, cfg.limit, seedTag = 4))
-    val viaCover = ids(Pipelines.negativeCellsViaCover(spark, painted, cfg,
-      cfg.limit, seedTag = 4, zMin = w.z - 4))
-    assert(viaCover == plain,
-      "cover-path negatives must be row-identical to the fine-set anti-join")
-    // and the cover really is the compressed form of the same area
+    // lossless: expanding the compacted cover returns exactly the painted set
+    val fine = painted.select($"cell_id").as[Long].collect().toSet
     val cover = CellOps.compact(painted.select($"cell_id"), cfg.z, w.z - 4)
-    assert(cover.count() < painted.select($"cell_id").distinct().count(),
+    assert(CellOps.uncompact(cover, cfg.z).as[Long].collect().toSet == fine,
+      "uncompact(compact(painted)) must equal painted")
+    // and the cover really is the compressed form of the same area
+    assert(cover.count() < fine.size,
       "area-shaped exclusions must compact smaller")
   }
 }
